@@ -11,20 +11,6 @@ import re
 from pyspark.sql import DataFrame
 
 
-def release_intermediates(df: DataFrame) -> None:
-    """Unpersist the intermediate frames an operator recorded on its
-    result (``df._sqlpp_persisted``). Call once the result has been
-    materialized (written / collected) — repeated operator invocations
-    without it accumulate cached blocks until LRU eviction. The
-    attribute lives on the returned object only; if you transform the
-    result further, release via the ORIGINAL handle."""
-    for f in getattr(df, "_sqlpp_persisted", ()):
-        try:
-            f.unpersist()
-        except Exception:
-            pass
-
-
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Guard CPU-bound expression stages (shingling, hashing, vector
     math) against under-parallelized scans: a small single-file input

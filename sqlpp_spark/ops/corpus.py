@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from sqlpp_spark.ops import ensure_parallelism
 from sqlpp_spark.ops.hashing import hash64
 from sqlpp_spark.ops.text import normalize_text
+from sqlpp_spark.session import own
 
 # ---------------------------------------------------------------------------
 # Deterministic (hash-based) sampling
@@ -1296,10 +1297,8 @@ def cms_counts(
     sketch build — one corpus scan instead of three. Callers
     composing further sketch ops can pass their own ``toks``.
     """
-    persisted = []
     if toks is None:
-        df = df.select(text_col).persist()
-        persisted.append(df)
+        df = own(df.select(text_col).persist())
         toks = token_stream(df, text_col)
 
     def cells_for(col: Column) -> Column:
@@ -1321,12 +1320,9 @@ def cms_counts(
     pcells = probes.select(
         "token", F.explode(cells_for(F.col("token"))).alias("c")
     ).select("token", F.col("c.j").alias("j"), F.col("c.b").alias("b"))
-    out = (
+    return (
         pcells.join(F.broadcast(sketch), on=["j", "b"], how="inner")
         .groupBy("token")
         .agg(F.min("cnt").alias("est_n"))
         .orderBy("token")
     )
-    if persisted:
-        out._sqlpp_persisted = persisted
-    return out

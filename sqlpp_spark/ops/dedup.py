@@ -17,27 +17,31 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import logging
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sqlpp_spark.ops import ensure_parallelism
-from sqlpp_spark.ops._exprcache import cached_expr, cached_exprs
 from sqlpp_spark.ops.hashing import (
     HASH_MOD, MINHASH_A, N_PERMS, hash64, perm_hash,
 )
 from sqlpp_spark.ops.text import normalize_text
+from sqlpp_spark.session import cached_expr, own
+
+_log = logging.getLogger("sqlpp_spark")
 
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
 
-def content_hash64(text_col: str = "text") -> Column:
+def content_hash64(spark: SparkSession, text_col: str = "text") -> Column:
     """Memoized ``hash64(normalize_text(text_col))`` tree (the same
     tree as text.fingerprint — shared cache key)."""
     return cached_expr(
-        ("fingerprint", text_col),
+        spark, ("fingerprint", text_col),
         lambda: hash64(normalize_text(F.col(text_col))),
     )
 
@@ -45,7 +49,7 @@ def content_hash64(text_col: str = "text") -> Column:
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Groups of byte-identical (normalized) docs: canonical id = min id,
     n_dups = group size. One shuffle on the 60-bit content hash."""
-    h = content_hash64(text_col).alias("content_hash")
+    h = content_hash64(df.sparkSession, text_col).alias("content_hash")
     df = ensure_parallelism(df)
     return (
         df.select(F.col(id_col), h)
@@ -87,21 +91,22 @@ def _shingle_rows(
     consumer's groupBy(doc), so a fused caller (pipeline_clean_corpus)
     can compute doc-level metadata and shingles in ONE text pass."""
     df = ensure_parallelism(df)
-    # constant unresolved trees, memoized (driver-side py4j cost —
-    # ops/_exprcache.py); aliases applied fresh at each use
+    # constant unresolved trees, memoized per session (driver-side py4j
+    # cost — session.SessionState); aliases applied fresh at each use
+    spark = df.sparkSession
     toks = cached_expr(
-        ("shingle_toks", text_col),
+        spark, ("shingle_toks", text_col),
         lambda: F.split(normalize_text(F.col(text_col)), " "),
     )
-    n_toks = cached_expr(("shingle_ntoks", text_col), lambda: F.size(toks))
+    n_toks = cached_expr(spark, ("shingle_ntoks", text_col), lambda: F.size(toks))
     pos = cached_expr(
-        ("shingle_pos", k),
+        spark, ("shingle_pos", k),
         lambda: F.when(
             F.col("__n") >= k, F.sequence(F.lit(1), F.col("__n") - (k - 1))
         ).otherwise(F.array(F.lit(0))),
     )
     sh_hash = cached_expr(
-        ("shingle_hash", k, fast_hash),
+        spark, ("shingle_hash", k, fast_hash),
         lambda: (F.xxhash64 if fast_hash else hash64)(
             F.when(
                 F.col("__i") > 0,
@@ -189,8 +194,8 @@ def _banded_rows(
     raw throughput in production."""
     _check_bands(n_perms, bands)
     rows = n_perms // bands
-    band_hashes = cached_exprs(
-        ("band_hashes", n_perms, bands),
+    band_hashes = cached_expr(
+        sigs.sparkSession, ("band_hashes", n_perms, bands),
         lambda: [
             hash64(
                 F.concat_ws(
@@ -222,11 +227,11 @@ def _band_pairs(
     if persist_banded:
         from pyspark import StorageLevel
 
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+        banded = own(banded.persist(StorageLevel.MEMORY_AND_DISK))
         banded.count()  # eager: the join's two map stages would race a lazy persist
     a = banded.alias("a")
     b = banded.alias("b")
-    out = (
+    return (
         a.join(
             b,
             on=[
@@ -240,10 +245,6 @@ def _band_pairs(
         )
         .distinct()
     )
-    if persist_banded:
-        # caller releases via ops.release_intermediates(result)
-        out._sqlpp_persisted = [banded]
-    return out
 
 
 def jaccard_pairs(
@@ -329,34 +330,30 @@ def minhash_near_duplicates(
     # previous array_min(transform(...)) form ran 16 interpreted array
     # walks per doc). min over the multiset equals min over the set —
     # perm_hash is a pure function of the shingle hash.
-    enriched = (
+    enriched = own(
         _shingle_rows(df, text_col, id_col, k)
         .groupBy(id_col)
-        .agg(*minhash_enrich_aggs())
+        .agg(*minhash_enrich_aggs(df.sparkSession))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     enriched.count()  # eager: four branches would race a lazy persist
-    out = verified_pairs_from_enriched(enriched, id_col, threshold)
-    # caller releases the cached enriched frame via
-    # ops.release_intermediates(result) after materializing
-    out._sqlpp_persisted = [enriched]
-    return out
+    return verified_pairs_from_enriched(enriched, id_col, threshold)
 
 
-def minhash_enrich_aggs(n_perms: int = N_PERMS) -> list[Column]:
+def minhash_enrich_aggs(spark: SparkSession, n_perms: int = N_PERMS) -> list[Column]:
     """The per-doc aggregate columns of the MinHash pipeline: the
     distinct shingle-hash set (Jaccard verification) plus the n_perms
     signature mins — shared between minhash_near_duplicates and fused
     callers that fold extra doc-level aggregates into the same
     groupBy (pipeline_clean_corpus)."""
-    mins = cached_exprs(
-        ("minhash_mins", "sh_hash", n_perms),
+    mins = cached_expr(
+        spark, ("minhash_mins", "sh_hash", n_perms),
         lambda: [
             F.min(perm_hash(F.col("sh_hash"), i)) for i in range(n_perms)
         ],
     )
     collect = cached_expr(
-        ("collect_set", "sh_hash"), lambda: F.collect_set("sh_hash")
+        spark, ("collect_set", "sh_hash"), lambda: F.collect_set("sh_hash")
     )
     return [
         collect.alias("shs"),
@@ -411,7 +408,7 @@ def connected_components(
 
     Returns (node, component) with component = min node id reachable,
     materialized via localCheckpoint (lineage-free). The round count is
-    exposed as ``result._sqlpp_cc_rounds``.
+    logged at DEBUG on the ``sqlpp_spark`` logger.
     """
     import warnings
 
@@ -477,7 +474,7 @@ def connected_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    labels._sqlpp_cc_rounds = rounds
+    _log.debug("connected_components rounds=%s", rounds)
     return labels
 
 
@@ -492,7 +489,7 @@ def near_duplicate_clusters(
     pairs = minhash_near_duplicates(df, text_col, id_col, k, threshold)
     comp = connected_components(pairs.select("id_a", "id_b"))
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
-    out = (
+    return (
         comp.join(sizes, on="comp")
         .select(
             F.col("node").alias(id_col),
@@ -500,11 +497,6 @@ def near_duplicate_clusters(
             "cluster_size",
         )
     )
-    out._sqlpp_persisted = [
-        *getattr(pairs, "_sqlpp_persisted", ()),
-        comp,  # connected_components returns its labels persisted
-    ]
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -576,7 +568,7 @@ def ngram_jaccard_pairs(
         sh = sh.join(blocks, on=id_col)
     else:
         sh = sh.withColumn("__blk", F.lit(1))
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = own(sh.persist(StorageLevel.MEMORY_AND_DISK))
     sh.count()  # eager: three downstream branches would race a lazy persist
 
     freq = None
@@ -584,9 +576,9 @@ def ngram_jaccard_pairs(
         # the prefix path needs this agg anyway; auto reads two scalars
         # off it to decide, so the decision costs one narrow (hash, df)
         # shuffle over the already-persisted shingle table
-        freq = sh.groupBy("__blk", "sh_hash").agg(
+        freq = own(sh.groupBy("__blk", "sh_hash").agg(
             F.count(F.lit(1)).alias("__df")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).persist(StorageLevel.MEMORY_AND_DISK))
     if strategy == "auto":
         stats = freq.agg(
             # double, not bigint: at the web scale this guard exists
@@ -678,9 +670,7 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    # release via ops.release_intermediates
-    out._sqlpp_persisted = [sh] if freq is None else [sh, freq]
-    out._sqlpp_jaccard_strategy = strategy  # observable for tests/tuning
+    _log.debug("ngram_jaccard_pairs strategy=%s", strategy)
     return out
 
 
@@ -722,7 +712,7 @@ def shingle_containment_pairs(
         sh = sh.join(blocks, on=id_col)
     else:
         sh = sh.withColumn("__blk", F.lit(1))
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    sh = own(sh.persist(StorageLevel.MEMORY_AND_DISK))
     sh.count()  # eager: prefix + verify branches would race a lazy persist
     freq = sh.groupBy("__blk", "sh_hash").agg(
         F.count(F.lit(1)).alias("__df")
@@ -775,15 +765,13 @@ def shingle_containment_pairs(
             F.size(F.array_intersect("__sa", "__sb")).alias("n_inter"),
         )
     )
-    out = inter.select(
+    return inter.select(
         "id_a", "id_b",
         (F.col("n_inter").cast("double") / F.col("sz_a").cast("double"))
         .alias("containment"),
         F.col("sz_a").cast("long").alias("sz_a"),
         F.col("sz_b").cast("long").alias("sz_b"),
     ).filter(F.col("containment") >= threshold)
-    out._sqlpp_persisted = [sh]
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -860,14 +848,14 @@ def simhash_near_duplicates(
     """
     from pyspark import StorageLevel
 
-    sigs = simhash(df, text_col, id_col, bits).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = own(
+        simhash(df, text_col, id_col, bits).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     sigs.count()  # eager: both self-join sides read it
-    out = hamming_near_duplicates(
+    return hamming_near_duplicates(
         sigs, sig_col="simhash", id_col=id_col, bits=bits,
         max_hamming=max_hamming,
     )
-    out._sqlpp_persisted = [sigs]  # release via ops.release_intermediates
-    return out
 
 
 def hamming_near_duplicates(
@@ -1105,12 +1093,10 @@ def canonical_by_quality(
     w = W.partitionBy("cluster_id").orderBy(
         F.col("quality").desc(), F.col(id_col).asc()
     )
-    out = full.select(
+    return full.select(
         id_col, "cluster_id", "cluster_size", "quality",
         (F.row_number().over(w) == 1).alias("keep"),
     )
-    out._sqlpp_persisted = getattr(clusters, "_sqlpp_persisted", [])
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1143,8 +1129,8 @@ def passage_dedup(
     never decides the min. The chunk frame feeds two consumers
     (winners + per-doc totals); ``persist_chunks`` (default True)
     caches it MEMORY_AND_DISK with an eager count (the minhash
-    pattern — lazy persist races) and hands it to the caller on
-    ``_sqlpp_persisted`` for release — the right trade whenever the
+    pattern — lazy persist races) and ``own``-s it for the caller's
+    ``query_scope`` — the right trade whenever the
     input's lineage is expensive (a parse/extract/cap pipeline: the
     r12 stage profile, PROFILE_pipeline_crawl_ingest.json, measured
     this form faster than both the semi-join original and a
@@ -1163,7 +1149,7 @@ def passage_dedup(
         chunk_tokens=passage_tokens, overlap=0,
     )
     if persist_chunks:
-        ch = ch.persist(StorageLevel.MEMORY_AND_DISK)
+        ch = own(ch.persist(StorageLevel.MEMORY_AND_DISK))
         ch.count()  # eager: two consumers would race a lazy persist
     hashed = ch.select(
         F.col(id_col), "chunk_id", "chunk_text",
@@ -1202,7 +1188,7 @@ def passage_dedup(
         )
     )
     totals = ch.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n_total"))
-    out = (
+    return (
         totals.join(kept_agg, on=id_col, how="left")
         .select(
             id_col,
@@ -1213,8 +1199,6 @@ def passage_dedup(
             .alias("n_dropped"),
         )
     )
-    out._sqlpp_persisted = [ch] if persist_chunks else []
-    return out
 
 
 def boilerplate_filter(

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from sqlpp_spark.ops import ensure_parallelism
+from sqlpp_spark.session import own
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -650,19 +651,17 @@ def image_near_duplicates(
 
     from sqlpp_spark.ops.dedup import hamming_near_duplicates
 
-    sigs = (
+    sigs = own(
         image_dhash(df)
         .filter(F.col("decoded"))
         .select("media_id", "dhash")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sigs.count()  # eager: both self-join sides read it
-    out = hamming_near_duplicates(
+    return hamming_near_duplicates(
         sigs, sig_col="dhash", id_col="media_id",
         bits=64, max_hamming=max_hamming,
     )
-    out._sqlpp_persisted = [sigs]
-    return out
 
 
 def _dhash64(arr) -> int:
@@ -940,19 +939,17 @@ def audio_near_duplicates(
 
     from sqlpp_spark.ops.dedup import hamming_near_duplicates
 
-    sigs = (
+    sigs = own(
         audio_fingerprint(df)
         .filter(F.col("decoded"))
         .select("media_id", "afp")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sigs.count()  # eager: both self-join sides read it
-    out = hamming_near_duplicates(
+    return hamming_near_duplicates(
         sigs, sig_col="afp", id_col="media_id",
         bits=64, max_hamming=max_hamming,
     )
-    out._sqlpp_persisted = [sigs]
-    return out
 
 
 def synthesize_audio_tile_media(

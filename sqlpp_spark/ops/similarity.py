@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from sqlpp_spark.ops import ensure_parallelism
 from sqlpp_spark.ops.dedup import cosine_sim
+from sqlpp_spark.session import own
 
 
 def brute_force_topk(
@@ -748,8 +749,8 @@ def semantic_dedup_pairs(
     real corpora (same plan shape).
 
     Returns (cell, id_a, id_b, cos) pairs with cos ≥ threshold.
-    The returned frame carries its persisted input in
-    ``_sqlpp_persisted`` — release via ops.release_intermediates."""
+    The persisted input is ``own``-ed by the caller's
+    ``query_scope``."""
     from pyspark import StorageLevel
 
     if quantizer == "pivot":
@@ -757,10 +758,10 @@ def semantic_dedup_pairs(
     else:
         _, centroids = ivf_index(corpus, n_cells, seed, vec_col, id_col)
         cell_ids = None
-    assigned = corpus.select(
+    assigned = own(corpus.select(
         F.col(id_col), F.col(vec_col),
         _nearest_cells(F.col(vec_col), centroids, 1, cell_ids)[0].alias("cell"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK))
     assigned.count()  # eager: both join sides read it
     a = assigned.select(
         F.col("cell"), F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
@@ -768,7 +769,7 @@ def semantic_dedup_pairs(
     b = assigned.select(
         F.col("cell"), F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
     )
-    out = (
+    return (
         a.join(b, on="cell")
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
@@ -777,8 +778,6 @@ def semantic_dedup_pairs(
         )
         .filter(F.col("cos") >= threshold)
     )
-    out._sqlpp_persisted = [assigned]
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -884,7 +883,7 @@ def knn_graph(
     # r11: BOTH join sides derive from `probed`; unpersisted, each
     # branch re-executed the per-row distance fold over every centroid
     # (the dominant per-row cost — 2× at k cells). Persist + eager
-    # count so the fold runs once; released via _sqlpp_persisted.
+    # count so the fold runs once; released by the caller's query_scope.
     # element_at(probes, 1) on the shared array is the same nearest
     # cell the candidate side used to compute separately (identical
     # (dist, cell) array_sort tie-break), so results are unchanged.
@@ -904,7 +903,7 @@ def knn_graph(
     if persist_probes:
         from pyspark import StorageLevel
 
-        probed = probed.persist(StorageLevel.MEMORY_AND_DISK)
+        probed = own(probed.persist(StorageLevel.MEMORY_AND_DISK))
         probed.count()
     c = probed.select(
         F.col("vid").alias("cand_id"), F.col("v").alias("cv"),
@@ -953,7 +952,6 @@ def knn_graph(
             F.col("rank").cast("bigint").alias("rank"),
         )
     )
-    out._sqlpp_persisted = [probed] if persist_probes else []
     return out
 
 
@@ -974,7 +972,7 @@ def knn_density(
     g = knn_graph(
         corpus, k, n_cells, n_probe, seed, vec_col, id_col, quantizer
     )
-    out = g.groupBy(F.col("query_id").alias(id_col)).agg(
+    return g.groupBy(F.col("query_id").alias(id_col)).agg(
         F.count(F.lit(1)).alias("n_neighbors"),
         (
             F.sum(F.round(F.col("cos"), 9).cast("decimal(20,9)"))
@@ -982,9 +980,6 @@ def knn_density(
             / F.count(F.lit(1))
         ).alias("density"),
     )
-    # propagate the graph's persisted probe frame to the new handle
-    out._sqlpp_persisted = getattr(g, "_sqlpp_persisted", [])
-    return out
 
 
 def label_centroid_outliers(
@@ -1088,7 +1083,7 @@ def kmeans_lloyd(
         F.col(vec_col), lambda x: F.floor(x.cast("double") * scale).cast("bigint")
     )
     base = corpus.select(F.col(id_col).alias("__vid"), qv.alias("__qv"))
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = own(base.persist(StorageLevel.MEMORY_AND_DISK))
     base.count()
     # k smallest ids (the documented contract, matching kcenter_greedy's
     # first pick) — orderBy+limit, NOT `__vid < k`, so sparse or
@@ -1133,7 +1128,6 @@ def kmeans_lloyd(
     out = assign(base).select(
         F.col("__vid").alias(id_col), F.col("cell").cast("bigint").alias("cell")
     )
-    out._sqlpp_persisted = [base]
     return out
 
 
@@ -1168,7 +1162,7 @@ def kcenter_greedy(
         F.col(vec_col), lambda x: F.floor(x.cast("double") * scale).cast("bigint")
     )
     base = corpus.select(F.col(id_col).alias("__vid"), qv.alias("__qv"))
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    base = own(base.persist(StorageLevel.MEMORY_AND_DISK))
     base.count()
 
     def sqdist_to(lit_vec):
@@ -1210,5 +1204,4 @@ def kcenter_greedy(
         best["center_id"].alias("center_id"),
         best["sqdist"].alias("sqdist"),
     )
-    out._sqlpp_persisted = [base]
     return out

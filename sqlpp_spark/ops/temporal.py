@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sqlpp_spark.session import own
+
 
 def asof_join(
     left: DataFrame,
@@ -198,7 +200,7 @@ def gapfill(
     # b feeds two consumers (the extent agg and the grid join); without
     # a persist both recompute the raw-table aggregate — two full scans
     # at 100 TB. The persisted frame is narrow: group, pos, two aggs.
-    b = b.persist(StorageLevel.MEMORY_AND_DISK)
+    b = own(b.persist(StorageLevel.MEMORY_AND_DISK))
     ext = b.groupBy(*gcols).agg(
         F.min("pos").alias("__mn"), F.max("pos").alias("__mx")
     )
@@ -246,7 +248,6 @@ def gapfill(
         F.coalesce(F.col("__n"), F.lit(0)).cast("bigint").alias("n_events"),
         filled.alias("bucket_value"),
     )
-    out._sqlpp_persisted = [b]  # caller releases via release_intermediates
     return out
 
 

@@ -10,10 +10,11 @@ correctness gate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqlpp_spark.ops.hashing import hash64, hash64_sql
+from sqlpp_spark.session import cached_expr
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
 # language heuristic. Real pipelines swap in fastText etc. via a Pandas
@@ -267,16 +268,14 @@ _MC = {w: f"__mc_{i}" for i, w in enumerate(_UNIQUE_MARKERS)}
 def _with_marker_counts(df: DataFrame, text_col: str) -> DataFrame:
     # one fused regex pass (materialized as a real column so the share
     # is guaranteed, not CSE-dependent), then cheap array filters.
-    # Constant unresolved trees are memoized (ops/_exprcache.py);
-    # aliases stay per-call.
-    from sqlpp_spark.ops._exprcache import cached_expr, cached_exprs
-
+    # Constant unresolved trees are memoized per session
+    # (session.SessionState); aliases stay per-call.
     mm = cached_expr(
-        ("marker_matches", text_col),
+        df.sparkSession, ("marker_matches", text_col),
         lambda: _marker_matches(F.col(text_col)),
     )
-    counts = cached_exprs(
-        ("marker_counts", tuple(_MC)),
+    counts = cached_expr(
+        df.sparkSession, ("marker_counts", tuple(_MC)),
         lambda: [_count_in(F.col("__mm"), w) for w in _MC],
     )
     tmp = df.select("*", mm.alias("__mm"))
@@ -286,9 +285,7 @@ def _with_marker_counts(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _lang_id_from_counts() -> Column:
-    from sqlpp_spark.ops._exprcache import cached_expr
-
+def _lang_id_from_counts(spark: SparkSession) -> Column:
     def _build() -> Column:
         best_lang = F.lit("und")
         best_score = F.lit(0)
@@ -299,7 +296,7 @@ def _lang_id_from_counts() -> Column:
             best_score = F.when(take, s).otherwise(best_score)
         return best_lang
 
-    return cached_expr(("lang_id_from_counts", tuple(_MC)), _build)
+    return cached_expr(spark, ("lang_id_from_counts", tuple(_MC)), _build)
 
 
 def _quality_from_counts(c: Column) -> Column:
@@ -325,30 +322,28 @@ def annotate(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Add ``lang_pred`` and ``quality`` columns with the shared-marker
     formulation (identical values to lang_id/quality_score)."""
     from sqlpp_spark.ops import ensure_parallelism
-    from sqlpp_spark.ops._exprcache import cached_expr
 
     df = ensure_parallelism(df)
     quality = cached_expr(
-        ("quality_from_counts", text_col),
+        df.sparkSession, ("quality_from_counts", text_col),
         lambda: _quality_from_counts(F.col(text_col)),
     )
-    out = _with_marker_counts(df, text_col).select(
+    return _with_marker_counts(df, text_col).select(
         *df.columns,
-        _lang_id_from_counts().alias("lang_pred"),
+        _lang_id_from_counts(df.sparkSession).alias("lang_pred"),
         quality.alias("quality"),
     )
-    return out
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One-pass per-document stats frame (markers computed once,
     shared between lang_pred and quality)."""
     from sqlpp_spark.ops import ensure_parallelism
-    from sqlpp_spark.ops._exprcache import cached_expr, cached_exprs
 
     df = ensure_parallelism(df)
-    stats = cached_exprs(
-        ("text_stats_cols", text_col),
+    spark = df.sparkSession
+    stats = cached_expr(
+        spark, ("text_stats_cols", text_col),
         lambda: [
             F.length(F.col(text_col)).cast("bigint"),
             token_count(F.col(text_col)),
@@ -356,18 +351,18 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         ],
     )
     quality = cached_expr(
-        ("quality_from_counts", text_col),
+        spark, ("quality_from_counts", text_col),
         lambda: _quality_from_counts(F.col(text_col)),
     )
     fp = cached_expr(
-        ("fingerprint", text_col), lambda: fingerprint(F.col(text_col))
+        spark, ("fingerprint", text_col), lambda: fingerprint(F.col(text_col))
     )
     return _with_marker_counts(df, text_col).select(
         "doc_id",
         stats[0].alias("n_chars"),
         stats[1].alias("n_tokens"),
         stats[2].alias("n_word_tokens"),
-        _lang_id_from_counts().alias("lang_pred"),
+        _lang_id_from_counts(spark).alias("lang_pred"),
         quality.alias("quality"),
         fp.alias("fp"),
     )

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sqlpp_spark.ops import ensure_parallelism
+from sqlpp_spark.session import own
 
 # scheme://[user@]host[:port]/... -> capture group 1 = host
 URL_DOMAIN_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)"
@@ -657,7 +658,7 @@ def pagerank(
     )
     from pyspark import StorageLevel
 
-    adj = adj.persist(StorageLevel.MEMORY_AND_DISK)
+    adj = own(adj.persist(StorageLevel.MEMORY_AND_DISK))
     adj.count()  # eager: one materialization serves every iteration
     nodes = (
         edges.select(F.col(src).alias("node"))
@@ -709,9 +710,7 @@ def pagerank(
             # every 4th iteration bounds plan depth for large n_iter.
             .localCheckpoint(eager=(_i % 4 == 3))
         )
-    out = pr
-    out._sqlpp_persisted = [adj]
-    return out
+    return pr
 
 
 def label_propagate(
@@ -831,7 +830,7 @@ def triangle_counts(
     )
     from pyspark import StorageLevel
 
-    canon = canon.persist(StorageLevel.MEMORY_AND_DISK)
+    canon = own(canon.persist(StorageLevel.MEMORY_AND_DISK))
     canon.count()  # eager: degree + orientation + membership reuse it
     deg = (
         canon.select(F.col("a").alias("node"))
@@ -876,7 +875,6 @@ def triangle_counts(
             ).otherwise(F.lit(0.0)).alias("clustering"),
         )
     )
-    out._sqlpp_persisted = [canon]
     return out
 
 

@@ -20,6 +20,7 @@ from sqlpp_spark.ops import similarity as S
 from sqlpp_spark.ops import text as X
 from sqlpp_spark.ops.hashing import hash64_sql, perm_hash_sql
 from sqlpp_spark.queries import register, table
+from sqlpp_spark.session import own
 
 # ---------------------------------------------------------------------------
 # Text analysis
@@ -395,11 +396,11 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = ann.select(
         "doc_id",
         _T,
-        D.content_hash64(_T).alias("__ch"),
+        D.content_hash64(spark, _T).alias("__ch"),
         "lang_pred",
         "quality",
     ).filter(F.col("quality") >= 0.5)
-    enriched = (
+    enriched = own(
         D._shingle_rows(
             meta, _T, "doc_id", 3,
             carry_cols=("__ch", "lang_pred", "quality"),
@@ -409,7 +410,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first("__ch").alias("__ch"),
             F.first("lang_pred").alias("lang_pred"),
             F.first("quality").alias("quality"),
-            *D.minhash_enrich_aggs(),
+            *D.minhash_enrich_aggs(spark),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -418,13 +419,10 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = enriched.join(keep_ids, on="doc_id", how="left_semi")
     pairs = D.verified_pairs_from_enriched(kept, "doc_id", threshold=0.7)
     removed = pairs.select(F.col("id_b").alias("doc_id")).distinct()
-    out = (
+    return (
         kept.join(removed, on="doc_id", how="left_anti")
         .select("doc_id", "lang_pred", "quality")
     )
-    # release via ops.release_intermediates(out) once materialized
-    out._sqlpp_persisted = [enriched]
-    return out
 
 
 def _cluster_oracle(k: int = 3, n_perms: int = 16, bands: int = 4,

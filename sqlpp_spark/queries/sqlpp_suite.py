@@ -9,18 +9,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from sqlpp_spark.queries import register
+from sqlpp_spark.session import session_state
 
 _TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
            "lineitem", "documents")
 
-_ENGINES: dict = {}
-
 
 def _engine(spark: SparkSession, sf_dir: str):
+    """The registry's engine over ``sf_dir``, one per session."""
     from sqlpp_spark.engine import SqlppEngine
 
-    key = (id(spark), sf_dir)
-    eng = _ENGINES.get(key)
+    engines = session_state(spark).engines
+    eng = engines.get(sf_dir)
     if eng is None:
         eng = SqlppEngine(spark)
         for t in _TABLES:
@@ -46,7 +46,7 @@ def _engine(spark: SparkSession, sf_dir: str):
             "(select 1 as b union all select b * 2 as b from p "
             "where b < 300000) select b from p;"
         )
-        _ENGINES[key] = eng
+        engines[sf_dir] = eng
     return eng
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from sqlpp_spark.ops import web as W
 from sqlpp_spark.ops.text import pii_counts, pii_counts_sql, redact_pii, redact_pii_sql
 from sqlpp_spark.queries import register, table
+from sqlpp_spark.session import own
 
 BLOCKED_DOMAINS = ["src1.example.com", "src3.example.org", "spam.example.net"]
 
@@ -362,12 +363,10 @@ def pipeline_web_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _with_url2(table(spark, sf_dir, "documents"))
     survivors = W.dedup_by_url(d)
     cleaned = D.passage_dedup(survivors, passage_tokens=8)
-    out = cleaned.filter(F.col("n_kept") > 0).select(
+    return cleaned.filter(F.col("n_kept") > 0).select(
         "doc_id", "clean_text", "n_kept", "n_dropped",
         X.quality_score(F.col("clean_text")).alias("quality"),
     )
-    out._sqlpp_persisted = getattr(cleaned, "_sqlpp_persisted", [])
-    return out
 
 
 # -- data-driven PSL domain cap (wildcard/exception/private rules) -----------
@@ -526,12 +525,10 @@ def pipeline_web_prepare_psl(spark: SparkSession, sf_dir: str) -> DataFrame:
     psl = W.psl_rules_df(spark, _PSL_RULES)
     capped = W.domain_cap(survivors, cap=10, psl=psl)
     cleaned = D.passage_dedup(capped, passage_tokens=8)
-    out = cleaned.filter(F.col("n_kept") > 0).select(
+    return cleaned.filter(F.col("n_kept") > 0).select(
         "doc_id", "clean_text", "n_kept", "n_dropped",
         X.quality_score(F.col("clean_text")).alias("quality"),
     )
-    out._sqlpp_persisted = getattr(cleaned, "_sqlpp_persisted", [])
-    return out
 
 
 # -- WARC crawl-archive extraction (round-9) ---------------------------------
@@ -851,7 +848,7 @@ def pipeline_crawl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("target_uri").alias("url"),
         html_text_col(F.col("body")).alias("text"),
     )
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    docs = own(docs.persist(StorageLevel.MEMORY_AND_DISK))
     docs.count()  # eager: rank + text branches would race a lazy persist
     psl = W.psl_rules_df(spark, _PSL_RULES)
     narrow = W.with_registrable_domain(
@@ -866,14 +863,10 @@ def pipeline_crawl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id")
     capped = docs.drop("url").join(picks, "doc_id", "left_semi")
     cleaned = D.passage_dedup(capped, passage_tokens=8)
-    out = cleaned.filter(F.col("n_kept") > 0).select(
+    return cleaned.filter(F.col("n_kept") > 0).select(
         "doc_id", "clean_text", "n_kept", "n_dropped",
         X.quality_score(F.col("clean_text")).alias("quality"),
     )
-    out._sqlpp_persisted = [
-        docs, *getattr(cleaned, "_sqlpp_persisted", ()),
-    ]
-    return out
 
 
 @register(

@@ -10,9 +10,13 @@ is enabled for the Pandas-UDF slow path.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import weakref
+from typing import Callable, Hashable, Iterator
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import Column, DataFrame, SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -119,3 +123,93 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:
             df.createOrReplaceTempView(name)
             dfs[name] = df
     return dfs
+
+
+class SessionState:
+    """What sqlpp_spark keeps for one SparkSession: plan-building
+    artifacts only, never data, so every action still scans parquet.
+
+    - ``exprs``: constant UNRESOLVED Column trees (``cached_expr``).
+      Building a deep tree costs one py4j round-trip per operator (the
+      16 minhash permutation aggregates alone ~440 ms of driver time).
+    - ``scans``: the normalized parquet scan per ``(path, mtime)``
+      (``sources.tables.read_table``); ``spark.read.parquet`` re-reads
+      the footer and file index on every call, 50-150 ms per table.
+    - ``engines``: the registry's ``SqlppEngine`` per fixture directory
+      (``queries.sqlpp_suite._engine``).
+    - ``scopes``: the frames ``own``-ed in each open ``query_scope``,
+      innermost last.
+    """
+
+    def __init__(self) -> None:
+        self.exprs: dict[Hashable, Column | list[Column]] = {}
+        self.scans: dict[tuple[str, int | None], DataFrame] = {}
+        self.engines: dict = {}
+        self.scopes: list[list[DataFrame]] = []
+
+
+_STATES: "weakref.WeakKeyDictionary[SparkSession, SessionState]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _stopped(spark: SparkSession) -> bool:
+    sc = getattr(spark, "_sc", None)  # Spark Connect sessions have none
+    return sc is not None and sc._jsc is None
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """The state of ``spark``, created on first use. A new session
+    (after ``spark.stop()`` and ``get_spark()``) starts empty."""
+    state = _STATES.get(spark)
+    if state is None:
+        # The values hold their session (every DataFrame and engine
+        # does), so the weak key alone never frees a stopped session's
+        # state: drop those when a new session arrives.
+        for old in [s for s in _STATES if _stopped(s)]:
+            del _STATES[old]
+        state = _STATES[spark] = SessionState()
+    return state
+
+
+def cached_expr(spark: SparkSession, key: Hashable, build: Callable):
+    """The Column (or list of Columns) memoized under ``key`` in
+    ``spark``'s state, built with ``build()`` on first use. Unresolved
+    trees carry no expression ids, so one tree can sit in any number of
+    plans; only ``Alias`` nodes allocate ids, so the trees MUST NOT
+    contain any: apply ``.alias()`` at the call site."""
+    exprs = session_state(spark).exprs
+    col = exprs.get(key)
+    if col is None:
+        col = exprs[key] = build()
+    return col
+
+
+def own(df: DataFrame) -> DataFrame:
+    """Register a persisted intermediate with the innermost open
+    ``query_scope`` of its session and return it. Outside any scope
+    the frame stays cached for the life of the session."""
+    scopes = session_state(df.sparkSession).scopes
+    if scopes:
+        scopes[-1].append(df)
+    return df
+
+
+@contextlib.contextmanager
+def query_scope(spark: SparkSession) -> Iterator[None]:
+    """Unpersist, on exit, every frame ``own``-ed while the scope is
+    open. Materialize results inside the scope: a lazy result still
+    reads the frames it was built over. Scopes nest; they belong to
+    the session, not to a thread."""
+    scopes = session_state(spark).scopes
+    frames: list[DataFrame] = []
+    scopes.append(frames)
+    try:
+        yield
+    finally:
+        scopes.pop()
+        for f in frames:
+            try:
+                f.unpersist()
+            except Py4JError:
+                pass  # the session was stopped inside the scope

@@ -18,36 +18,28 @@ Two normalizations, both lossless:
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Per-session memo of the normalized scan plans (guide §6: file
-# listing / footer metadata should be read once per session, the way a
-# catalog would). ``spark.read.parquet`` re-reads the footer schema and
-# rebuilds the file index on every call — 50-150 ms of driver time per
-# table per builder invocation, multiplied across a 28-query bench
-# pass. A DataFrame is an immutable logical plan, so reusing it across
-# queries in one session changes nothing about execution; the cache
-# key carries the file mtime so a fixture regenerated mid-session gets
-# a fresh scan, and the WeakKeyDictionary drops entries with their
-# session. No data is cached — every action still scans parquet.
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+from sqlpp_spark.session import session_state
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The normalized scan of ``<sf_dir>/<name>.parquet``. A repeat read
+    in one session returns the same DataFrame (the session's scan memo,
+    ``session.SessionState``): footer and file listing are read once per
+    session, the way a catalog would. The key carries the file mtime,
+    so a fixture regenerated mid-session gets a fresh scan."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         mtime = os.stat(path).st_mtime_ns
     except OSError:
         mtime = None
-    per_session = _TABLE_CACHE.setdefault(spark, {})
+    scans = session_state(spark).scans
     key = (path, mtime)
-    df = per_session.get(key)
+    df = scans.get(key)
     if df is not None:
         return df
     if name == "events":
@@ -61,7 +53,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = _normalize_nanos(df)
     df = _normalize_ntz(df)
-    per_session[key] = df
+    scans[key] = df
     return df
 
 

@@ -18,6 +18,24 @@ def media(spark, sf_dir):
     return synthesize_media(docs)
 
 
+def _plan_nodes(df, name: str) -> int:
+    """Number of ``name`` nodes in ``df``'s executed plan, walked
+    through the AQE wrappers (AdaptiveSparkPlan, *QueryStage)."""
+
+    def count(node) -> int:
+        kind = node.nodeName()
+        if kind == "AdaptiveSparkPlan":
+            return count(node.executedPlan())
+        if kind.endswith("QueryStage"):
+            return count(node.plan())
+        kids = node.children()
+        return (kind == name) + sum(
+            count(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return count(df._jdf.queryExecution().executedPlan())
+
+
 def test_media_schema(media):
     kinds = dict(media.dtypes)
     assert kinds["payload"] == "binary"
@@ -971,9 +989,6 @@ def test_jpeg_fused_synth_decode_identical(spark, sf_dir):
     the same per-batch decode body, composed 1:1 — and its plan must
     carry ONE MapInPandas node where the staged form chained two (the
     JPEG payloads never cross the Arrow boundary in the fused shape)."""
-    import contextlib
-    import io
-
     from sqlpp_spark.ops.multimodal import (
         synthesize_and_decode_jpeg_media,
         synthesize_jpeg_media,
@@ -986,14 +1001,8 @@ def test_jpeg_fused_synth_decode_identical(spark, sf_dir):
     s_rows = sorted(staged.collect(), key=lambda r: r.media_id)
     assert f_rows and f_rows == s_rows
     assert all(r.decoded for r in f_rows)  # real entropy decode ran
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        # a FRESH frame: an executed one prints initial + final AQE
-        # plans (doubling every node count)
-        synthesize_and_decode_jpeg_media(docs).explain("formatted")
-    # one MapInPandas node = 2 occurrences (header + details); the
-    # staged form prints 4
-    assert buf.getvalue().count("MapInPandas") == 2
+    assert _plan_nodes(fused, "MapInPandas") == 1
+    assert _plan_nodes(staged, "MapInPandas") == 2
 
 
 def test_jpeg_fused_rejects_unknown_family(spark, sf_dir):
@@ -1025,9 +1034,6 @@ def test_fused_synth_decode_identical(spark, sf_dir, family):
     (``_<family>_media_batches``) and the same per-batch decode body
     (``_decode_pdf``), composed 1:1 — and its plan must carry ONE
     MapInPandas node where the staged form chained two."""
-    import contextlib
-    import io
-
     from sqlpp_spark.ops import multimodal as MM
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1037,14 +1043,8 @@ def test_fused_synth_decode_identical(spark, sf_dir, family):
     s_rows = sorted(staged.collect(), key=lambda r: r.media_id)
     assert f_rows and f_rows == s_rows
     assert all(r.decoded for r in f_rows)  # the real decode ran
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        # a FRESH frame: an executed one prints initial + final AQE
-        # plans (doubling every node count)
-        MM.synthesize_and_decode_media(docs, family).explain("formatted")
-    # one MapInPandas node = 2 occurrences (header + details); the
-    # staged form prints 4
-    assert buf.getvalue().count("MapInPandas") == 2
+    assert _plan_nodes(fused, "MapInPandas") == 1
+    assert _plan_nodes(staged, "MapInPandas") == 2
 
 
 def test_fused_media_rejects_unknown_family(spark, sf_dir):

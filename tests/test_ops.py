@@ -3,8 +3,18 @@ approximate methods are checked against their exact counterparts."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
+
+
+def _logged(caplog, event: str) -> list:
+    """The values the ``sqlpp_spark`` logger recorded as ``<event>=%s``."""
+    return [
+        r.args[0] for r in caplog.records
+        if r.name == "sqlpp_spark" and r.msg == f"{event}=%s"
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -58,7 +68,7 @@ def test_connected_components_chain_and_triangle(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_path_graph_log_rounds(spark):
+def test_connected_components_path_graph_log_rounds(spark, caplog):
     """1000-node path graph (diameter 999): pointer jumping must label
     the whole chain with node 0 in O(log diameter) rounds — one-hop
     propagation alone would need 999 and trip the max_iter warning."""
@@ -68,12 +78,13 @@ def test_connected_components_path_graph_log_rounds(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     ).coalesce(4)
-    labels = connected_components(edges, max_iter=25)
+    with caplog.at_level(logging.DEBUG, logger="sqlpp_spark"):
+        labels = connected_components(edges, max_iter=25)
     rows = labels.collect()
     assert len(rows) == n
     assert all(r.comp == 0 for r in rows)
-    assert labels._sqlpp_cc_rounds <= 15, labels._sqlpp_cc_rounds
-    labels.unpersist()
+    [rounds] = _logged(caplog, "connected_components rounds")
+    assert rounds <= 15, rounds
 
 
 def test_lsh_near_dup_pairs_subset_of_exact(spark, emb):
@@ -417,16 +428,38 @@ def test_normalize_url_idempotent(spark):
     assert bad == [], bad[:5]
 
 
-def test_release_intermediates_unpersists(spark, docs):
-    from sqlpp_spark.ops import release_intermediates
+@pytest.mark.parametrize(
+    "builder", ["minhash_near_duplicates", "pipeline_crawl_ingest"]
+)
+def test_query_scope_unpersists(spark, sf_dir, docs, builder):
+    """Every frame persisted inside ``query_scope`` is unpersisted when
+    the scope exits, including the frames a chained builder's inner
+    operators persisted (pipeline_crawl_ingest persists ``docs`` and
+    passage_dedup's chunks), while a frame owned with no scope open
+    stays cached. Ids persisted before the scope may meanwhile be
+    freed by Spark's ContextCleaner (unreferenced localCheckpoints),
+    so the check is that no id the scope added survives it."""
     from sqlpp_spark.ops.dedup import minhash_near_duplicates
+    from sqlpp_spark.queries import REGISTRY, _ensure_loaded
+    from sqlpp_spark.session import own, query_scope
 
-    out = minhash_near_duplicates(docs.limit(50))
-    out.count()
-    cached = out._sqlpp_persisted
-    assert cached and all(f.storageLevel.useMemory for f in cached)
-    release_intermediates(out)
-    assert all(not f.storageLevel.useMemory for f in cached)
+    def persistent_ids() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    outside = own(docs.select("doc_id").persist())
+    outside.count()
+    before = persistent_ids()
+    with query_scope(spark):
+        if builder == "minhash_near_duplicates":
+            out = minhash_near_duplicates(docs.limit(50))
+        else:
+            _ensure_loaded()
+            out = REGISTRY[builder].builder(spark, sf_dir)
+        out.collect()
+        assert persistent_ids() - before, "the builder persisted nothing"
+    assert persistent_ids() - before == set()
+    assert outside.storageLevel.useMemory
+    outside.unpersist()
 
 
 def test_contamination_hash_grams_same_result(spark, docs):
@@ -595,7 +628,7 @@ def test_ngram_jaccard_strategies_agree(spark, docs):
     assert base == pref and len(base) > 0
 
 
-def test_ngram_jaccard_auto_picks_prefix_on_zipf_head(spark):
+def test_ngram_jaccard_auto_picks_prefix_on_zipf_head(spark, caplog):
     """strategy="auto" must engage prefix filtering when the shingle
     document-frequency head is hot (a shared boilerplate phrase in
     every doc — the Zipf shape of real web text), and fall back to the
@@ -608,9 +641,11 @@ def test_ngram_jaccard_auto_picks_prefix_on_zipf_head(spark):
         [(i, f"{boiler} unique tail {i} alpha beta", "en") for i in range(120)],
         "doc_id long, text string, lang string",
     )
-    out = ngram_jaccard_pairs(zipf, threshold=0.9)
-    assert out._sqlpp_jaccard_strategy == "prefix"
+    with caplog.at_level(logging.DEBUG, logger="sqlpp_spark"):
+        out = ngram_jaccard_pairs(zipf, threshold=0.9)
+    assert _logged(caplog, "ngram_jaccard_pairs strategy") == ["prefix"]
     out.collect()
+    caplog.clear()
 
     flat = spark.createDataFrame(
         [
@@ -619,8 +654,9 @@ def test_ngram_jaccard_auto_picks_prefix_on_zipf_head(spark):
         ],
         "doc_id long, text string, lang string",
     )
-    out2 = ngram_jaccard_pairs(flat, threshold=0.9)
-    assert out2._sqlpp_jaccard_strategy == "join"
+    with caplog.at_level(logging.DEBUG, logger="sqlpp_spark"):
+        ngram_jaccard_pairs(flat, threshold=0.9)
+    assert _logged(caplog, "ngram_jaccard_pairs strategy") == ["join"]
 
 
 def test_substring_duplication_rate_semantics(spark):
@@ -1087,7 +1123,7 @@ def test_domain_cap_with_psl_private_suffix_quotas(spark):
     assert n_gh == 10
 
 
-def test_ngram_jaccard_auto_picks_prefix_on_flat_collision_growth(spark):
+def test_ngram_jaccard_auto_picks_prefix_on_flat_collision_growth(spark, caplog):
     """10× rehearsal finding (SCALING.md): a FLAT distribution over a
     FIXED vocabulary goes quadratic as the corpus grows — every
     shingle's df rises ∝ corpus so Σ df² ∝ n², while max(df)² stays
@@ -1103,8 +1139,9 @@ def test_ngram_jaccard_auto_picks_prefix_on_flat_collision_growth(spark):
         for i in range(300)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = ngram_jaccard_pairs(df, threshold=0.95)
-    assert out._sqlpp_jaccard_strategy == "prefix"
+    with caplog.at_level(logging.DEBUG, logger="sqlpp_spark"):
+        out = ngram_jaccard_pairs(df, threshold=0.95)
+    assert _logged(caplog, "ngram_jaccard_pairs strategy") == ["prefix"]
     out.collect()
 
 
@@ -1356,8 +1393,8 @@ def test_pagerank_fixed_point_exact(spark):
     """Hand-computed fixed-point iterations on a 3-node cycle with one
     chord: every value must match the scalar integer recurrence
     EXACTLY (that exactness is the operator's whole contract)."""
-    from sqlpp_spark.ops import release_intermediates
     from sqlpp_spark.ops.web import pagerank
+    from sqlpp_spark.session import query_scope
 
     edges = [(0, 1), (1, 2), (2, 0), (0, 2)]  # node 0 has outdeg 2
     df = spark.createDataFrame(edges, "src long, dst long")
@@ -1372,15 +1409,13 @@ def test_pagerank_fixed_point_exact(spark):
             for v in targets:
                 sums[v] += pr[u] // deg[u]
         pr = {n: base + (dp * sums[n]) // 100 for n in pr}
-    g = pagerank(df, n_iter=4)
-    got = {r.node: r.pr for r in g.collect()}
-    release_intermediates(g)
+    with query_scope(spark):
+        got = {r.node: r.pr for r in pagerank(df, n_iter=4).collect()}
     assert got == pr
     # a sink (no out-edges) is ranked but contributes nothing
     df2 = spark.createDataFrame([(0, 1), (2, 1)], "src long, dst long")
-    g2 = pagerank(df2, n_iter=2)
-    got2 = {r.node: r.pr for r in g2.collect()}
-    release_intermediates(g2)
+    with query_scope(spark):
+        got2 = {r.node: r.pr for r in pagerank(df2, n_iter=2).collect()}
     assert set(got2) == {0, 1, 2}
     assert got2[0] == got2[2] == base  # nothing links to them
 
@@ -1413,16 +1448,15 @@ def test_triangle_counts_known_graphs(spark):
     path (0 triangles), duplicate + reversed + self-loop edges
     canonicalized away, and a hub whose wedges must not explode the
     count (the orientation guarantees each triangle counts once)."""
-    from sqlpp_spark.ops import release_intermediates
     from sqlpp_spark.ops.web import triangle_counts
+    from sqlpp_spark.session import query_scope
 
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     extra = [(3, 3), (1, 0), (0, 1), (4, 5), (5, 6)]  # noise
     df = spark.createDataFrame(k4 + extra, "src long, dst long")
-    out = triangle_counts(df)
-    got = {r.node: (r.degree, r.n_triangles, r.clustering)
-           for r in out.collect()}
-    release_intermediates(out)
+    with query_scope(spark):
+        got = {r.node: (r.degree, r.n_triangles, r.clustering)
+               for r in triangle_counts(df).collect()}
     for n in (1, 2):
         assert got[n] == (3, 3, 1.0)
     assert got[0][0] == 3 and got[0][1] == 3  # dup/reversed deduped
@@ -1431,10 +1465,10 @@ def test_triangle_counts_known_graphs(spark):
     assert got[4][1] == 0 and got[6][1] == 0
     # star K1,5 + one rim edge: hub participates in exactly 1 triangle
     star = [(0, i) for i in range(1, 6)] + [(1, 2)]
-    out2 = triangle_counts(
-        spark.createDataFrame(star, "src long, dst long"))
-    got2 = {r.node: r.n_triangles for r in out2.collect()}
-    release_intermediates(out2)
+    with query_scope(spark):
+        out2 = triangle_counts(
+            spark.createDataFrame(star, "src long, dst long"))
+        got2 = {r.node: r.n_triangles for r in out2.collect()}
     assert got2[0] == 1 and got2[1] == 1 and got2[2] == 1
     assert got2[3] == got2[4] == got2[5] == 0
 
@@ -1718,8 +1752,8 @@ def test_pair_cosine_numpy_equals_hof(spark):
 def test_knn_graph_output_identical_across_cosine_paths(spark):
     """The full auto kNN graph row set must be identical whichever
     cosine/probe path executes."""
-    from sqlpp_spark.ops import release_intermediates
     from sqlpp_spark.queries import REGISTRY, _ensure_loaded
+    from sqlpp_spark.session import query_scope
 
     _ensure_loaded()
     spec = REGISTRY["ann_knn_graph_auto"]
@@ -1729,9 +1763,8 @@ def test_knn_graph_output_identical_across_cosine_paths(spark):
         spark.conf.set("spark.sqlpp.ann.pythonProbes", flag)
         spark.conf.set("spark.sqlpp.ann.pythonCosine", flag)
         try:
-            df = spec.builder(spark, sf)
-            out[flag] = sorted(map(tuple, df.collect()))
-            release_intermediates(df)
+            with query_scope(spark):
+                out[flag] = sorted(map(tuple, spec.builder(spark, sf).collect()))
         finally:
             spark.conf.set("spark.sqlpp.ann.pythonProbes", "true")
             spark.conf.set("spark.sqlpp.ann.pythonCosine", "true")

@@ -40,13 +40,11 @@ def _loaded():
 
 
 def plan_of(spark, sf_dir, name: str, mode: str = "formatted") -> str:
-    from sqlpp_spark.ops import release_intermediates
+    from sqlpp_spark.session import query_scope
 
-    df = REGISTRY[name].builder(spark, sf_dir)
     buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    release_intermediates(df)
+    with query_scope(spark), contextlib.redirect_stdout(buf):
+        REGISTRY[name].builder(spark, sf_dir).explain(mode)
     return buf.getvalue()
 
 

@@ -17,8 +17,8 @@ import os
 
 import pytest
 
-from sqlpp_spark.ops import release_intermediates
 from sqlpp_spark.queries import REGISTRY, _ensure_loaded
+from sqlpp_spark.session import query_scope
 from sqlpp_spark.testing.oracle import compare, run_oracle
 
 _ensure_loaded()
@@ -51,9 +51,12 @@ def _write_local_correctness(sf_dir):
 def test_oracle_match(spark, sf_dir, name):
     spec = REGISTRY[name]
     try:
-        sdf = spec.builder(spark, sf_dir)
-        odf = run_oracle(spec.oracle, sf_dir)
-        report = compare(sdf, odf)
+        # the scope drops the query's persisted intermediates so 120
+        # parametrized runs in one session don't accumulate cached blocks
+        with query_scope(spark):
+            report = compare(
+                spec.builder(spark, sf_dir), run_oracle(spec.oracle, sf_dir)
+            )
     except Exception as e:
         _LOCAL_ROWS[name] = {
             "rows_match": False, "schema_match": False, "hash_match": False,
@@ -69,9 +72,6 @@ def test_oracle_match(spark, sf_dir, name):
         "oracle_rows": report["rows_oracle"],
         "err": None,
     }
-    # drop per-query persisted intermediates so 120 parametrized runs
-    # in one session don't accumulate cached blocks
-    release_intermediates(sdf)
     assert report["match"], f"{name}: {report}"
 
 
@@ -79,8 +79,8 @@ def test_oracle_match(spark, sf_dir, name):
 def test_rows_only_runs(spark, sf_dir, name):
     spec = REGISTRY[name]
     try:
-        df = spec.builder(spark, sf_dir)
-        n = df.count()
+        with query_scope(spark):
+            n = spec.builder(spark, sf_dir).count()
     except Exception as e:
         _LOCAL_ROWS[name] = {
             "rows_match": None, "schema_match": None, "hash_match": None,
@@ -91,7 +91,6 @@ def test_rows_only_runs(spark, sf_dir, name):
         "rows_match": None, "schema_match": None, "hash_match": None,
         "spark_rows": n, "oracle_rows": None, "err": "no_oracle",
     }
-    release_intermediates(df)
     assert n >= 0
 
 

@@ -40,9 +40,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from sqlpp_spark.ops import release_intermediates  # noqa: E402
 from sqlpp_spark.queries import headline_queries  # noqa: E402
-from sqlpp_spark.session import TABLES  # noqa: E402
+from sqlpp_spark.session import TABLES, query_scope  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 SCALE10 = "/tmp/scale10"
@@ -222,10 +221,9 @@ def run_one(spark, builder, sf_dir):
     spark.catalog.clearCache()
     before = stage_totals(spark)
     t0 = time.perf_counter()
-    df = builder(spark, sf_dir)
-    n = df.count()
-    dt = time.perf_counter() - t0
-    release_intermediates(df)
+    with query_scope(spark):
+        n = builder(spark, sf_dir).count()
+        dt = time.perf_counter() - t0
     after = stage_totals(spark)
     return {
         "sec": round(dt, 3),

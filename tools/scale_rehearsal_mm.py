@@ -180,8 +180,8 @@ def knn_persist_crossover(spark, reps: int = 3) -> dict:
     ops/similarity.knn_graph's source."""
     import statistics
 
-    from sqlpp_spark.ops import release_intermediates
     from sqlpp_spark.ops.similarity import knn_graph
+    from sqlpp_spark.session import query_scope
     from sqlpp_spark.sources.tables import read_table
 
     def storage_bytes() -> dict:
@@ -203,13 +203,13 @@ def knn_persist_crossover(spark, reps: int = 3) -> dict:
 
         def run(persist: bool) -> tuple:
             spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            g = knn_graph(emb, k=5, n_cells="auto", n_probe=2,
-                          persist_probes=persist)
-            rows = g.count()
-            dt = time.perf_counter() - t0
-            cached = storage_bytes() if persist else None
-            release_intermediates(g)
+            with query_scope(spark):
+                t0 = time.perf_counter()
+                g = knn_graph(emb, k=5, n_cells="auto", n_probe=2,
+                              persist_probes=persist)
+                rows = g.count()
+                dt = time.perf_counter() - t0
+                cached = storage_bytes() if persist else None
             return dt, rows, cached
 
         run(True)  # warm codegen for both plans

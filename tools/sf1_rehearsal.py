@@ -39,8 +39,8 @@ from scale_rehearsal import (  # noqa: E402
     SCALE10, build_fixture, get_spark_with_ui, stage_totals,
 )
 
-from sqlpp_spark.ops import release_intermediates  # noqa: E402
 from sqlpp_spark.queries import REGISTRY, _ensure_loaded  # noqa: E402
+from sqlpp_spark.session import query_scope  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/sf1"
@@ -96,10 +96,9 @@ def run_one(spark, builder, sf_dir):
         spark.catalog.clearCache()
         before = stage_totals(spark)
         t0 = time.perf_counter()
-        df = builder(spark, sf_dir)
-        n = df.count()
-        dt = time.perf_counter() - t0
-        release_intermediates(df)
+        with query_scope(spark):
+            n = builder(spark, sf_dir).count()
+            dt = time.perf_counter() - t0
         after = stage_totals(spark)
         rec = {
             "sec": round(dt, 3),

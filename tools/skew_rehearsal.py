@@ -44,8 +44,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from scale_rehearsal import get_spark_with_ui  # noqa: E402
 
-from sqlpp_spark.ops import release_intermediates  # noqa: E402
-from sqlpp_spark.session import TABLES  # noqa: E402
+from sqlpp_spark.session import TABLES, query_scope  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 SKEWFIX = "/tmp/skewfix"
@@ -162,10 +161,9 @@ def run_one(spark, builder, sf_dir) -> dict:
     spark.catalog.clearCache()
     before = stage_list(spark)
     t0 = time.perf_counter()
-    df = builder(spark, sf_dir)
-    n = df.count()
-    dt = time.perf_counter() - t0
-    release_intermediates(df)
+    with query_scope(spark):
+        n = builder(spark, sf_dir).count()
+        dt = time.perf_counter() - t0
     after = stage_list(spark)
     new = {k: v for k, v in after.items() if k not in before}
     shuffle = sum(v.get("shuffleWriteBytes", 0) for v in new.values())
